@@ -29,49 +29,40 @@ survive executor churn (multi-hour pipelines, shared caches), use
 ``persist(StorageLevel.MEMORY_AND_DISK_2)`` or a reliable
 ``checkpoint()`` to a replicated store instead.
 
-Small-graph fast paths (round 15): every iterative operator here pays a
-measured ~1.2-1.7 s of FIXED cost per distributed round at small scale
-(AQE stage-job submissions, per-round plan analysis, checkpoint
-barriers — q184: ~0.15 s of task time inside a 1.6 s round), so when
-the materialized edge list is at/below :data:`GRAPH_SMALL_MAX_ROWS`
-rows the operator runs its exact single-task twin instead (union-find /
-in-memory peeling / integer iteration via one ``mapInPandas`` task —
-the global_prefix small-input precedent, decided on the EXACT row count
-the operator already computes rather than a Catalyst estimate, which
-errs 5-6 orders of magnitude high through join lineages). Results are
-bit-identical (integer/decimal-exact arithmetic; shortest-repr HALF_UP
-rounding twins); the distributed forms remain the scale path and stay
-oracle-verified via the env-pinned parity artifact
-($SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS=0 sweep) plus the fast ≡ distributed
-property pins in tests/test_graph_small_path.py.
+Small-graph fast path — one rule for all six operators. Each operator
+materializes its edge frame once (an eager localCheckpoint) and reads
+its EXACT row count; a Catalyst estimate would err 5-6 orders of
+magnitude high through join lineages. When ``0 < n ≤
+_small_max_rows()`` (:data:`GRAPH_SMALL_MAX_ROWS`, overridable only by
+$SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS — 0 disables every fast path — and
+capped by :data:`_FAST_PATH_HARD_MAX_ROWS`), :func:`_route` runs the
+operator's single-task kernel as one ``coalesce(1).mapInPandas`` task
+and cuts the result with an eager localCheckpoint, so contract errors
+raise at call time. Kernels raise contract errors through
+:func:`_contract`, which frames the exception type and message in a
+sentinel token; :func:`_route` decodes it and re-raises the same type
+and message the distributed form raises. Results are bit-identical
+(integer/decimal-exact arithmetic, shortest-repr HALF_UP twins). The
+distributed forms remain the scale path: fast ≡ distributed is pinned
+by tests/test_graph_small_path.py, and the distributed forms stay
+oracle-verified by the parity sweep run with the env knob at 0.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Default edge-count line at/below which the iterative operators run
-#: their SINGLE-TASK exact form instead of the unrolled distributed
-#: rounds (round 15, the global_prefix small-input precedent). The
-#: decision reads the EXACT materialized row count every operator in
-#: this module already computes (its edge frame is eagerly
-#: localCheckpointed and counted for convergence/guard purposes), not a
-#: Catalyst estimate — join/window-built edge lineages estimate 5-6
-#: orders of magnitude high (measured: q135's edge frame estimates
-#: 1.1 TB against a true 587k rows), so the global_prefix sizeInBytes
-#: branch can never fire here. A ≤2M-row edge list is a few tens of MB
-#: of narrow pairs — data one ordinary task already handles — while the
-#: distributed rounds pay ~1.2-1.7 s of PURE per-round fixed cost
-#: (AQE stage-job submissions + per-round plan analysis; measured on
-#: q184: 6 rounds × 1.6 s wall against ~0.15 s of actual task time per
-#: round). Override with $SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS (0 disables
-#: every fast path) or per call via ``small_max_rows``; the distributed
-#: forms stay oracle-verified by the env-pinned parity sweep artifact
-#: (PARITY_graphdist_* — see OPTIMIZATION_r15.md) and the fast ≡
-#: distributed property pins in tests/test_graph_small_path.py.
+#: Default edge-count line at/below which the operators run their
+#: single-task kernel (module docstring) instead of the unrolled
+#: distributed rounds. A ≤2M-row edge list is a few tens of MB of narrow
+#: pairs — one ordinary task's worth — while each distributed round pays
+#: ~1.2-1.7 s of pure fixed cost at small scale (AQE stage-job
+#: submissions plus per-round plan analysis; measured on q184: 6 rounds
+#: × 1.6 s wall against ~0.15 s of task time per round).
 GRAPH_SMALL_MAX_ROWS = 2_000_000
 
 #: int64 headroom guard for the fast paths' scaled-integer decimal
@@ -80,22 +71,69 @@ GRAPH_SMALL_MAX_ROWS = 2_000_000
 #: refused the fast path regardless of the configured threshold.
 _FAST_PATH_HARD_MAX_ROWS = 8_000_000
 
+_SMALL_MAX_ROWS_ENV = "SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS"
 
-def _small_max_rows(override: int | None) -> int:
-    """Resolve the fast-path edge-count line: explicit argument wins
-    (0 = force distributed, the test pin), else the env override, else
-    the module default — mirroring global_prefix's small_input_bytes
-    contract."""
-    if override is not None:
-        return min(int(override), _FAST_PATH_HARD_MAX_ROWS)
-    raw = os.environ.get("SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS")
+# Contract messages — each is shared by an operator's fast and
+# distributed forms, so both raise the same text.
+_NULL_ID_MSG = ("graph edge list has null node ids; drop or fill null "
+                "endpoints before calling the graph operator")
+_DANGLING_MSG = ("graph has nodes without out-edges; symmetrize() the "
+                 "edge list or drop dangling nodes before pagerank()")
+
+
+def _kcore_budget_msg(k: int, max_rounds: int) -> str:
+    return (f"k_core(k={k}) did not converge within max_rounds="
+            f"{max_rounds} peel rounds; raise max_rounds — returning an "
+            "un-peeled supergraph would report non-core nodes as core")
+
+
+def _hits_bound_msg(rounds: int, din: int, dout: int) -> str | None:
+    """The HITS int64 guard shared by both forms: scores after r
+    authority updates are bounded by Din^r · Dout^(r−1) (h₀=1; each
+    authority update multiplies by ≤ Din, each hub update by ≤ Dout).
+    Exact Python-bigint check; returns the contract message when the
+    bound passes 2⁶³−1, else None."""
+    if din <= 0 or din ** rounds * max(dout, 1) ** (rounds - 1) <= 2 ** 63 - 1:
+        return None
+    return (f"hits_scores(rounds={rounds}) worst-case score "
+            f"Din^r·Dout^(r-1) = {din}^{rounds}·{dout}^{rounds - 1} "
+            "exceeds int64 — note this bound is CONSERVATIVE: it "
+            "pairs the global max in-degree and max out-degree even "
+            "when they belong to unconnected nodes, so the true max "
+            "score may be far smaller (ADVICE r12). Lower rounds "
+            "(rank order is stable by 2 on conveying graphs) or use "
+            "a decimal-fold variant if the graph's actual structure "
+            "keeps scores in range")
+
+
+#: Frames a kernel's contract error inside the task-failure text Spark
+#: hands back to the driver (see :func:`_contract`).
+_SENTINEL = "@@graph-contract@@"
+_CONTRACT_TYPES = {"ValueError": ValueError, "RuntimeError": RuntimeError}
+_CONTRACT_RE = re.compile(
+    f"{re.escape(_SENTINEL)}({'|'.join(_CONTRACT_TYPES)}):(.*?)"
+    f"{re.escape(_SENTINEL)}", re.DOTALL)
+
+
+def _contract(exc_type: type, message: str) -> Exception:
+    """A contract error for a kernel to raise: its type name and message
+    ride between two sentinel tokens through Spark's task-failure text,
+    and :func:`_route` re-raises them on the driver as ``exc_type(message)``."""
+    return exc_type(f"{_SENTINEL}{exc_type.__name__}:{message}{_SENTINEL}")
+
+
+def _small_max_rows() -> int:
+    """The fast-path edge-count line: $SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS
+    (0 = always distributed), else :data:`GRAPH_SMALL_MAX_ROWS`, capped
+    by :data:`_FAST_PATH_HARD_MAX_ROWS`."""
+    raw = os.environ.get(_SMALL_MAX_ROWS_ENV)
     if raw is None:
         return min(GRAPH_SMALL_MAX_ROWS, _FAST_PATH_HARD_MAX_ROWS)
     try:
         n = int(raw)
     except ValueError:
         raise ValueError(
-            f"$SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS={raw!r} is not an "
+            f"${_SMALL_MAX_ROWS_ENV}={raw!r} is not an "
             "integer; set a row count (0 disables every graph fast "
             "path) or unset it for the default "
             f"({GRAPH_SMALL_MAX_ROWS})") from None
@@ -113,7 +151,9 @@ def _factorize(*arrays):
     sort then touches only the |V| uniques). Ordering identity: numpy
     sorts numerics numerically and strings by code point, both equal
     to the comparison ``np.argsort`` applies to the unique values, so
-    the (nodes, inv) pair is bit-identical to the np.unique form."""
+    the (nodes, inv) pair is bit-identical to the np.unique form.
+    ``pd.factorize`` codes a null id as −1, which would alias it onto
+    the last node, so a null raises the null-id contract error."""
     import numpy as np
     import pandas as pd
 
@@ -121,11 +161,60 @@ def _factorize(*arrays):
     if len(allv) == 0:
         return np.unique(allv, return_inverse=True)
     codes, uniq = pd.factorize(allv)
+    if (codes < 0).any():
+        raise _contract(ValueError, _NULL_ID_MSG)
     uniq = np.asarray(uniq)
     order = np.argsort(uniq, kind="stable")
     rank = np.empty(len(order), dtype=np.int64)
     rank[order] = np.arange(len(order), dtype=np.int64)
     return uniq[order], rank[codes]
+
+
+def _edge_index(batches, col_a: str, col_b: str):
+    """The kernel preamble: concatenate the task's Arrow batches of the
+    two endpoint columns and factorize both over one sorted node index
+    → ``(nodes, idx_a, idx_b)``."""
+    import numpy as np
+
+    a_parts, b_parts = [], []
+    for pdf in batches:
+        a_parts.append(pdf[col_a].to_numpy())
+        b_parts.append(pdf[col_b].to_numpy())
+    a = np.concatenate(a_parts) if a_parts else np.array([])
+    b = np.concatenate(b_parts) if b_parts else np.array([])
+    nodes, inv = _factorize(a, b)
+    return nodes, inv[:len(a)], inv[len(a):]
+
+
+def _route(e: DataFrame, n: int, schema: str, kernel, *args):
+    """The small-graph router (module docstring). When ``0 < n ≤
+    _small_max_rows()``, run ``kernel(nodes, idx_a, idx_b, *args)`` —
+    a pandas frame of ``schema`` — over ALL of the materialized
+    two-column edge frame ``e`` (row count ``n``) in one task:
+    ``coalesce(1)`` is a narrow read of its cached blocks, no shuffle,
+    one Arrow hand-off. The result is cut eagerly, so a kernel's
+    :func:`_contract` error raises here as the same type and message
+    the distributed form raises. Returns None when the caller must run
+    its distributed form."""
+    if not 0 < n <= _small_max_rows():
+        return None
+    col_a, col_b = e.columns
+
+    def task(batches):
+        yield kernel(*_edge_index(batches, col_a, col_b), *args)
+
+    try:
+        return (e.coalesce(1).mapInPandas(task, schema)
+                .localCheckpoint(eager=True))
+    except Exception as ex:
+        m = _CONTRACT_RE.search(str(ex))
+        if m is None:
+            raise
+        raise _CONTRACT_TYPES[m.group(1)](m.group(2)) from None
+
+
+def _id_type(e: DataFrame, col: str) -> str:
+    return e.schema[col].dataType.simpleString()
 
 
 def _quantize_scaled_int(x, digits: int):
@@ -161,14 +250,6 @@ def _quantize_scaled_int(x, digits: int):
     return out
 
 
-def _single_task(df: DataFrame, fn, schema: str) -> DataFrame:
-    """Run ``fn`` (a mapInPandas iterator function) over ALL of ``df``
-    in one task. ``df`` is a small materialized (localCheckpointed)
-    frame, so ``coalesce(1)`` is a narrow read of its cached blocks —
-    no shuffle, one Arrow hand-off, one job."""
-    return df.coalesce(1).mapInPandas(fn, schema)
-
-
 def _round_half_up(x: float, digits: int) -> float:
     """Python twin of Spark's ``round(double, d)`` / double→decimal
     cast semantics: shortest-repr decimalization (JVM
@@ -194,8 +275,8 @@ def symmetrize(edges: DataFrame, src: str = "src",
             .distinct())
 
 
-def _pagerank_single_task(e: DataFrame, iterations: int,
-                          damping: float) -> DataFrame:
+def _pagerank_kernel(nodes, src_i, dst_i, iterations: int,
+                     damping: float):
     """Single-task exact PageRank twin of the distributed unroll: the
     SAME arithmetic, step for step — 6-rounded r₀, per-node double
     division by out-degree, HALF_UP quantization to 12 decimals
@@ -207,80 +288,64 @@ def _pagerank_single_task(e: DataFrame, iterations: int,
     whole trajectory does (pinned by tests/test_graph_small_path.py).
     Like the distributed form, only nodes receiving an in-contribution
     in the final round appear in the output."""
-    typ = e.schema["src"].dataType.simpleString()
-    base_lit = round(1.0 - damping, 6)
+    from decimal import ROUND_HALF_UP, Decimal
 
-    def fn(batches):
-        from decimal import ROUND_HALF_UP, Decimal
+    import numpy as np
+    import pandas as pd
 
-        import numpy as np
-        import pandas as pd
-
-        q6 = Decimal("1E-6")
-        q12 = Decimal("1E-12")
-        srcs, dsts = [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-        src = np.concatenate(srcs) if srcs else np.array([])
-        dst = np.concatenate(dsts) if dsts else np.array([])
-        nodes, inv = _factorize(src, dst)
-        src_i, dst_i = inv[:len(src)], inv[len(src):]
-        n = len(nodes)
-        outdeg = np.bincount(src_i, minlength=n)
-        if (outdeg == 0).any():
-            raise ValueError(
-                "graph has nodes without out-edges; symmetrize() the "
-                "edge list or drop dangling nodes before pagerank()")
-        r0 = float(Decimal(repr(1.0 / n)).quantize(q6, ROUND_HALF_UP))
-        base = float(Decimal(repr(base_lit / n))
-                     .quantize(q12, ROUND_HALF_UP))
-        rank = np.full(n, r0)
-        has = np.ones(n, bool)
-        for _ in range(iterations):
-            # vectorized twins of the old per-node Decimal loops
-            # (ADVICE r15 medium) — _quantize_scaled_int falls back to
-            # Decimal on boundary/overflow elements, so every value is
-            # still the exact Decimal(repr(·)).quantize(·, HALF_UP)
-            ratio = rank / outdeg
-            c_int = np.zeros(n, np.int64)
-            idx = np.flatnonzero(has)
-            c_int[idx] = _quantize_scaled_int(ratio[idx], 12)
-            emask = has[src_i]
-            acc = np.zeros(n, np.int64)
-            np.add.at(acc, dst_i[emask], c_int[src_i[emask]])
-            received = np.zeros(n, bool)
-            received[dst_i[emask]] = True
-            new_rank = np.zeros(n)
-            ridx = np.flatnonzero(received)
-            # acc < 2^53 ⇒ the int64→double conversion is exact and the
-            # /1e12 (exact divisor) is the correctly-rounded quotient —
-            # identical to float(Decimal(acc).scaleb(-12)); past 2^53
-            # (unreachable: Σ contributions ≤ ~1·1e12) fall back
-            big = np.abs(acc[ridx]) >= 2 ** 53
-            in_f = acc[ridx].astype(np.float64) / 1e12
-            if big.any():
-                for j in np.flatnonzero(big):
-                    in_f[j] = float(Decimal(int(acc[ridx[j]])).scaleb(-12))
-            new_int = _quantize_scaled_int(base + damping * in_f, 6)
-            new_rank[ridx] = new_int.astype(np.float64) / 1e6
-            rank, has = new_rank, received
-        keep = np.flatnonzero(has)
-        yield pd.DataFrame({"node": nodes[keep], "rank": rank[keep]})
-
-    return _single_task(e, fn, f"node {typ}, rank double")
+    q6 = Decimal("1E-6")
+    q12 = Decimal("1E-12")
+    n = len(nodes)
+    outdeg = np.bincount(src_i, minlength=n)
+    if (outdeg == 0).any():
+        raise _contract(ValueError, _DANGLING_MSG)
+    r0 = float(Decimal(repr(1.0 / n)).quantize(q6, ROUND_HALF_UP))
+    base = float(Decimal(repr(round(1.0 - damping, 6) / n))
+                 .quantize(q12, ROUND_HALF_UP))
+    rank = np.full(n, r0)
+    has = np.ones(n, bool)
+    for _ in range(iterations):
+        # vectorized twins of the old per-node Decimal loops
+        # (ADVICE r15 medium) — _quantize_scaled_int falls back to
+        # Decimal on boundary/overflow elements, so every value is
+        # still the exact Decimal(repr(·)).quantize(·, HALF_UP)
+        ratio = rank / outdeg
+        c_int = np.zeros(n, np.int64)
+        idx = np.flatnonzero(has)
+        c_int[idx] = _quantize_scaled_int(ratio[idx], 12)
+        emask = has[src_i]
+        acc = np.zeros(n, np.int64)
+        np.add.at(acc, dst_i[emask], c_int[src_i[emask]])
+        received = np.zeros(n, bool)
+        received[dst_i[emask]] = True
+        new_rank = np.zeros(n)
+        ridx = np.flatnonzero(received)
+        # acc < 2^53 ⇒ the int64→double conversion is exact and the
+        # /1e12 (exact divisor) is the correctly-rounded quotient —
+        # identical to float(Decimal(acc).scaleb(-12)); past 2^53
+        # (unreachable: Σ contributions ≤ ~1·1e12) fall back
+        big = np.abs(acc[ridx]) >= 2 ** 53
+        in_f = acc[ridx].astype(np.float64) / 1e12
+        if big.any():
+            for j in np.flatnonzero(big):
+                in_f[j] = float(Decimal(int(acc[ridx[j]])).scaleb(-12))
+        new_int = _quantize_scaled_int(base + damping * in_f, 6)
+        new_rank[ridx] = new_int.astype(np.float64) / 1e6
+        rank, has = new_rank, received
+    keep = np.flatnonzero(has)
+    return pd.DataFrame({"node": nodes[keep], "rank": rank[keep]})
 
 
 def pagerank(edges: DataFrame, iterations: int = 3,
              damping: float = 0.85, src: str = "src",
-             dst: str = "dst",
-             small_max_rows: int | None = None) -> DataFrame:
+             dst: str = "dst") -> DataFrame:
     """PageRank with a FIXED iteration count, statically unrolled:
     ``r₀(v) = 1/N``; ``r_{k+1}(v) = (1−d)/N + d·Σ_{u→v} r_k(u)/outdeg(u)``.
 
     Every node must have at least one out-edge (use :func:`symmetrize`
-    first, or pre-drop dangling nodes) — asserted via a loud count check
-    at plan-build time on the degree frame, not silently mis-ranked.
+    first, or pre-drop dangling nodes), and no edge may have a null
+    endpoint — both raise ValueError at call time rather than
+    mis-ranking silently.
 
     Each iteration is one equi-join of the (node, rank) vector with the
     edge list on the source key followed by a groupBy on the destination
@@ -289,55 +354,35 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     are plain-double divisions of the 6-rounded previous rank by the
     integer out-degree, folded in decimal(28,12) (partition-order
     independent), damped, and re-rounded to 6 — every iteration's vector
-    is bit-identical across engines, so the fixpoint trajectory is too.
+    is bit-identical across engines, so the fixpoint trajectory is too,
+    and so is the single-task kernel (:func:`_pagerank_kernel`).
     The rank vector localCheckpoints every few rounds (deep loops
-    only) to bound lineage; shallow unrolls run as one pipelined job.
-
-    Small-graph fast path (round 15): the edge list is materialized
-    once (an eager localCheckpoint — the dangling-node guard forced a
-    materialization before this round too, as the first action over the
-    persisted frame) and its exact row count picks the form: at/below
-    ``small_max_rows`` (default :data:`GRAPH_SMALL_MAX_ROWS`) the whole
-    trajectory runs as ONE single-task job
-    (:func:`_pagerank_single_task`, bit-identical per iteration — the
-    parity design above is exactly what makes a cross-engine twin
-    possible); above it, the distributed unroll below. Pass
-    ``small_max_rows=0`` to pin the distributed form."""
+    only) to bound lineage; shallow unrolls run as one pipelined job."""
     if iterations < 1:
         raise ValueError("pagerank needs at least 1 iteration")
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
          .localCheckpoint(eager=True))
-    n_edges = e.count()
-    # Fast path BEFORE the dangling guard (round 16): the single task
-    # runs the identical outdeg==0 check in-kernel, and the eager
-    # localCheckpoint below surfaces it AT CALL TIME as the same
-    # contract ValueError — so the two driver-side guard jobs (nodes
-    # distinct + anti-join, ~0.6 s at sf0.1) are pure duplication on
-    # this path. The distributed branch keeps the plan-build guard
-    # (its unrolled joins cannot check in-flight). The result cut is
-    # node-sized, so the materialization is the one task job the
-    # caller's first action would have paid anyway.
-    if 0 < n_edges <= _small_max_rows(small_max_rows):
-        out = _pagerank_single_task(e, iterations, damping)
-        try:
-            return out.localCheckpoint(eager=True)
-        except Exception as ex:
-            if "nodes without out-edges" in str(ex):
-                raise ValueError(
-                    "graph has nodes without out-edges; symmetrize() "
-                    "the edge list or drop dangling nodes before "
-                    "pagerank()") from None
-            raise
+    # The kernel runs the null and dangling checks itself, so the fast
+    # path skips the two driver-side guard jobs below.
+    fast = _route(e, e.count(), f"node {_id_type(e, 'src')}, rank double",
+                  _pagerank_kernel, iterations, damping)
+    if fast is not None:
+        return fast
     deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct())
-    dangling = (nodes.join(deg.withColumnRenamed("src", "node"),
-                           "node", "left_anti").limit(1).count())
-    if dangling:
-        raise ValueError(
-            "graph has nodes without out-edges; symmetrize() the edge "
-            "list or drop dangling nodes before pagerank()")
+    # a null id never equi-joins its degree row, so the one guard job
+    # over the anti-join catches null ids and dangling nodes alike
+    bad = (nodes.join(deg.withColumnRenamed("src", "node"),
+                      "node", "left_anti")
+           .agg(F.count("*").alias("n"),
+                F.max(F.col("node").isNull()).alias("null"))
+           .first())
+    if bad["null"]:
+        raise ValueError(_NULL_ID_MSG)
+    if bad["n"]:
+        raise ValueError(_DANGLING_MSG)
     n_nodes = nodes.select(F.count("*").alias("__n"))
     # 1−d as the 6-rounded literal, NOT the raw float subtraction:
     # Python's 1.0−0.85 and a SQL engine's CAST(0.15 AS DOUBLE) are
@@ -367,92 +412,76 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                          .alias("rank")))
         if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
-    # NOTE: e is localCheckpointed (round 15 — it doubles as the
-    # fast-path row-count read), so the (lazy) iterations re-read its
+    # NOTE: e is localCheckpointed, so the (lazy) iterations re-read its
     # materialized partitions; Spark drops them with the session.
     return ranks
 
 
-def _triangle_single_task(e: DataFrame) -> DataFrame:
+def _triangle_kernel(nodes, u_i, v_i):
     """Single-task exact twin of the distributed triangle count over a
     small materialized canonical edge frame: same (deg, id) orientation
     (so the enumeration stays O(E^1.5) bounded), wedge→edge membership
     via sorted int64 keys, all-integer counts, and the identical
     round-6 clustering arithmetic. Wedge enumeration flushes in chunks
     so memory stays bounded even on adversarially dense inputs."""
+    import numpy as np
+    import pandas as pd
 
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
+    n = len(nodes)
+    m = len(u_i)
+    deg = np.bincount(u_i, minlength=n) + np.bincount(v_i, minlength=n)
+    n_wedges = int(sum(int(d) * (int(d) - 1) // 2 for d in deg))
+    # orient each edge from its (deg, id)-smaller endpoint; with
+    # factorized ids, index order ≡ id order, so the struct key
+    # (deg, id) maps to the int64 composite deg*n + idx exactly
+    ok = deg.astype(np.int64) * n + np.arange(n, dtype=np.int64)
+    swap = ok[u_i] > ok[v_i]
+    a = np.where(swap, v_i, u_i).astype(np.int64)
+    b = np.where(swap, u_i, v_i).astype(np.int64)
+    edge_keys = np.sort(a * n + b)
+    order = np.lexsort((ok[b], a))
+    a_s, b_s = a[order], b[order]
+    starts = np.flatnonzero(np.r_[True, a_s[1:] != a_s[:-1]])
+    ends = np.r_[starts[1:], m]
+    tri = 0
+    chunk: list = []
+    chunk_rows = 0
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
-        n = len(nodes)
-        m = len(u_i)
-        deg = np.bincount(u_i, minlength=n) + np.bincount(v_i, minlength=n)
-        n_wedges = int(sum(int(d) * (int(d) - 1) // 2 for d in deg))
-        # orient each edge from its (deg, id)-smaller endpoint; with
-        # factorized ids, index order ≡ id order, so the struct key
-        # (deg, id) maps to the int64 composite deg*n + idx exactly
-        ok = deg.astype(np.int64) * n + np.arange(n, dtype=np.int64)
-        swap = ok[u_i] > ok[v_i]
-        a = np.where(swap, v_i, u_i).astype(np.int64)
-        b = np.where(swap, u_i, v_i).astype(np.int64)
-        edge_keys = np.sort(a * n + b)
-        order = np.lexsort((ok[b], a))
-        a_s, b_s = a[order], b[order]
-        starts = np.flatnonzero(np.r_[True, a_s[1:] != a_s[:-1]])
-        ends = np.r_[starts[1:], m]
-        tri = 0
-        chunk: list = []
-        chunk_rows = 0
+    def flush(chunk, tri):
+        if not chunk:
+            return tri
+        w = np.concatenate(chunk)
+        # membership of each wedge key in the sorted oriented edge
+        # keys: insertion point + exact-match check
+        idx = np.searchsorted(edge_keys, w)
+        valid = idx < len(edge_keys)
+        return tri + int((edge_keys[idx[valid]] == w[valid]).sum())
 
-        def flush(chunk, tri):
-            if not chunk:
-                return tri
-            w = np.concatenate(chunk)
-            # membership of each wedge key in the sorted oriented edge
-            # keys: insertion point + exact-match check
-            idx = np.searchsorted(edge_keys, w)
-            valid = idx < len(edge_keys)
-            return tri + int((edge_keys[idx[valid]] == w[valid]).sum())
-
-        for s, t in zip(starts, ends):
-            nb = b_s[s:t]
-            d = len(nb)
-            if d < 2:
-                continue
-            ix, iy = np.triu_indices(d, 1)
-            chunk.append(nb[ix] * n + nb[iy])
-            chunk_rows += len(ix)
-            if chunk_rows >= 4_000_000:
-                tri = flush(chunk, tri)
-                chunk, chunk_rows = [], 0
-        tri = flush(chunk, tri)
-        if n_wedges > 0:
-            gc = _round_half_up(3.0 * tri / n_wedges, 6)
-        else:
-            gc = 0.0
-        yield pd.DataFrame({"n_nodes": np.array([n], np.int64),
-                            "n_edges": np.array([m], np.int64),
-                            "n_wedges": np.array([n_wedges], np.int64),
-                            "n_triangles": np.array([tri], np.int64),
-                            "global_clustering": [gc]})
-
-    return _single_task(
-        e, fn, "n_nodes bigint, n_edges bigint, n_wedges bigint, "
-               "n_triangles bigint, global_clustering double")
+    for s, t in zip(starts, ends):
+        nb = b_s[s:t]
+        d = len(nb)
+        if d < 2:
+            continue
+        ix, iy = np.triu_indices(d, 1)
+        chunk.append(nb[ix] * n + nb[iy])
+        chunk_rows += len(ix)
+        if chunk_rows >= 4_000_000:
+            tri = flush(chunk, tri)
+            chunk, chunk_rows = [], 0
+    tri = flush(chunk, tri)
+    if n_wedges > 0:
+        gc = _round_half_up(3.0 * tri / n_wedges, 6)
+    else:
+        gc = 0.0
+    return pd.DataFrame({"n_nodes": np.array([n], np.int64),
+                         "n_edges": np.array([m], np.int64),
+                         "n_wedges": np.array([n_wedges], np.int64),
+                         "n_triangles": np.array([tri], np.int64),
+                         "global_clustering": [gc]})
 
 
 def triangle_count(edges: DataFrame, src: str = "src",
-                   dst: str = "dst",
-                   small_max_rows: int | None = None) -> DataFrame:
+                   dst: str = "dst") -> DataFrame:
     """Exact triangle count + global clustering coefficient — the
     second classic distributed-graph workload beside :func:`pagerank`,
     and the canonical example of a join whose COST is controlled by an
@@ -479,11 +508,14 @@ def triangle_count(edges: DataFrame, src: str = "src",
     u = F.least(F.col(src), F.col(dst)).alias("u")
     v = F.greatest(F.col(src), F.col(dst)).alias("v")
     e = (edges.select(u, v)
-         .where(F.col("u") != F.col("v")).distinct().persist())
-    if 0 < e.count() <= _small_max_rows(small_max_rows):
-        out = _triangle_single_task(e).localCheckpoint(eager=True)
-        e.unpersist()
-        return out
+         .where(F.col("u") != F.col("v")).distinct()
+         .localCheckpoint(eager=True))
+    fast = _route(e, e.count(),
+                  "n_nodes bigint, n_edges bigint, n_wedges bigint, "
+                  "n_triangles bigint, global_clustering double",
+                  _triangle_kernel)
+    if fast is not None:
+        return fast
     deg = (e.select(F.col("u").alias("n"))
            .unionAll(e.select(F.col("v").alias("n")))
            .groupBy("n").agg(F.count("*").alias("deg")))
@@ -501,38 +533,39 @@ def triangle_count(edges: DataFrame, src: str = "src",
         .otherwise(F.col("u")).alias("b"),
         F.when(F.col("ok_u") < F.col("ok_v"), F.col("ok_v"))
         .otherwise(F.col("ok_u")).alias("ok_b")).persist()
-    w1 = o.select(F.col("a"), F.col("b").alias("x"),
-                  F.col("ok_b").alias("ok_x"))
-    w2 = o.select(F.col("a"), F.col("b").alias("y"),
-                  F.col("ok_b").alias("ok_y"))
-    wedges = (w1.join(w2, "a")
-              .where(F.col("ok_x") < F.col("ok_y"))
-              .select(F.col("x").alias("wa"), F.col("y").alias("wb")))
-    tri = (wedges.join(o.select(F.col("a").alias("wa"),
-                                F.col("b").alias("wb")), ["wa", "wb"])
-           .agg(F.count("*").cast("bigint").alias("n_triangles")))
-    stats = (deg.agg(
-        F.count("*").cast("bigint").alias("n_nodes"),
-        # deg·(deg−1) is even → shiftright 1 is an EXACT integer /2
-        # (the old double division loses exactness past deg ~9e7);
-        # accumulate in decimal(38,0) — a BIGINT wedge sum overflows
-        # with a handful of 1e9-degree hubs (VERDICT r10 #4 audit).
-        # Per-term bound: deg < ~3e9 before the bigint product wraps.
-        F.sum(F.shiftright(F.col("deg") * (F.col("deg") - 1), 1)
-              .cast("decimal(38,0)"))
-        .cast("bigint").alias("n_wedges")))
-    n_edges = e.agg(F.count("*").cast("bigint").alias("n_edges"))
-    out = (tri.crossJoin(F.broadcast(stats))
-           .crossJoin(F.broadcast(n_edges))
-           .select("n_nodes", "n_edges", "n_wedges", "n_triangles",
-                   F.round(F.when(F.col("n_wedges") > 0,
-                                  F.lit(3.0) * F.col("n_triangles")
-                                  / F.col("n_wedges"))
-                           .otherwise(F.lit(0.0)), 6)
-                   .alias("global_clustering")))
-    out = out.localCheckpoint(eager=True)
-    e.unpersist(); o.unpersist()
-    return out
+    try:
+        w1 = o.select(F.col("a"), F.col("b").alias("x"),
+                      F.col("ok_b").alias("ok_x"))
+        w2 = o.select(F.col("a"), F.col("b").alias("y"),
+                      F.col("ok_b").alias("ok_y"))
+        wedges = (w1.join(w2, "a")
+                  .where(F.col("ok_x") < F.col("ok_y"))
+                  .select(F.col("x").alias("wa"), F.col("y").alias("wb")))
+        tri = (wedges.join(o.select(F.col("a").alias("wa"),
+                                    F.col("b").alias("wb")), ["wa", "wb"])
+               .agg(F.count("*").cast("bigint").alias("n_triangles")))
+        stats = (deg.agg(
+            F.count("*").cast("bigint").alias("n_nodes"),
+            # deg·(deg−1) is even → shiftright 1 is an EXACT integer /2
+            # (the old double division loses exactness past deg ~9e7);
+            # accumulate in decimal(38,0) — a BIGINT wedge sum overflows
+            # with a handful of 1e9-degree hubs (VERDICT r10 #4 audit).
+            # Per-term bound: deg < ~3e9 before the bigint product wraps.
+            F.sum(F.shiftright(F.col("deg") * (F.col("deg") - 1), 1)
+                  .cast("decimal(38,0)"))
+            .cast("bigint").alias("n_wedges")))
+        n_edges = e.agg(F.count("*").cast("bigint").alias("n_edges"))
+        out = (tri.crossJoin(F.broadcast(stats))
+               .crossJoin(F.broadcast(n_edges))
+               .select("n_nodes", "n_edges", "n_wedges", "n_triangles",
+                       F.round(F.when(F.col("n_wedges") > 0,
+                                      F.lit(3.0) * F.col("n_triangles")
+                                      / F.col("n_wedges"))
+                               .otherwise(F.lit(0.0)), 6)
+                       .alias("global_clustering")))
+        return out.localCheckpoint(eager=True)
+    finally:
+        o.unpersist()
 
 
 def _cc_canonical(edges: DataFrame, src: str = "src",
@@ -582,7 +615,7 @@ def _cc_small_star(d: DataFrame) -> DataFrame:
             .where(F.col("u") != F.col("v")).distinct())
 
 
-def _cc_union_find(e: DataFrame) -> DataFrame:
+def _cc_kernel(nodes, u_i, v_i):
     """Single-task exact connected components over a small materialized
     canonical edge frame: label = component minimum — the same labeling
     the star-contraction fixpoint provably produces, in one in-memory
@@ -590,55 +623,38 @@ def _cc_union_find(e: DataFrame) -> DataFrame:
     each. Self-loop rows register their node as a singleton, matching
     ``_cc_canonical``'s contract.
 
-    Round 16 (VERDICT r15 #7 class): the per-edge Python dict
-    union-find became vectorized min-label hooking with full
-    pointer-jumping compression — each round every node takes the
-    minimum label over its closed neighborhood, then labels compress
-    through themselves until stable; O(log n) rounds of O(E) C-level
-    numpy work replaces ~1 µs/edge of interpreter time. Exactness:
+    Vectorized min-label hooking with full pointer-jumping compression:
+    each round every node takes the minimum label over its closed
+    neighborhood, then labels compress through themselves until stable;
+    O(log n) rounds of O(E) C-level numpy work. Exactness:
     labels never increase, an edge at the fixpoint joins equal labels
     (so each component is constant), and identity initialization only
     propagates indices belonging to the component — the constant is
     the component's minimum index, which (nodes sorted ascending) is
     its minimum value: the identical labeling, pinned by
     tests/test_graph_small_path.py."""
-    typ = e.schema["u"].dataType.simpleString()
+    import numpy as np
+    import pandas as pd
 
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
-        n = len(nodes)
-        lab = np.arange(n, dtype=np.int64)
-        while True:
-            new = lab.copy()
-            np.minimum.at(new, u_i, lab[v_i])
-            np.minimum.at(new, v_i, lab[u_i])
-            while True:  # full path compression
-                nn = new[new]
-                if np.array_equal(nn, new):
-                    break
-                new = nn
-            if np.array_equal(new, lab):
+    lab = np.arange(len(nodes), dtype=np.int64)
+    while True:
+        new = lab.copy()
+        np.minimum.at(new, u_i, lab[v_i])
+        np.minimum.at(new, v_i, lab[u_i])
+        while True:  # full path compression
+            nn = new[new]
+            if np.array_equal(nn, new):
                 break
-            lab = new
-        yield pd.DataFrame({"node": nodes, "label": nodes[lab]})
-
-    return _single_task(e, fn, f"node {typ}, label {typ}")
+            new = nn
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    return pd.DataFrame({"node": nodes, "label": nodes[lab]})
 
 
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
-                         max_iter: int = 25,
-                         small_max_rows: int | None = None) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """Connected components by alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — the O(log n)-round labeling that completes the graph
@@ -663,18 +679,9 @@ def connected_components(edges: DataFrame, src: str = "src",
     every node incident to an edge, labeled by its component's minimum
     id (self-loops contribute their node; fully isolated nodes never
     appear in ``edges`` and are the caller's singletons, same contract
-    as dedup_clusters).
-
-    Small-graph fast path (round 15): when the materialized canonical
-    edge count — already computed here for the convergence checksum —
-    is at/below ``small_max_rows`` (default
-    :data:`GRAPH_SMALL_MAX_ROWS`, env-overridable), the labeling runs
-    as ONE single-task union-find (:func:`_cc_union_find`) instead of
-    ~log(n) checkpointed rounds; identical labels (component minimum),
-    pinned by tests/test_graph_small_path.py. ``max_iter`` applies to
-    the distributed rounds only — the fast path always converges
-    exactly (union-find has no round budget to exhaust); pass
-    ``small_max_rows=0`` to pin the distributed form."""
+    as dedup_clusters). ``max_iter`` applies to the distributed rounds
+    only — the single-task kernel (:func:`_cc_kernel`) always converges
+    exactly."""
     e = _cc_canonical(edges, src, dst).localCheckpoint(eager=True)
 
     def checksum(d: DataFrame):
@@ -688,8 +695,10 @@ def connected_components(edges: DataFrame, src: str = "src",
         return (r["n"], r["h"])
 
     sig = checksum(e)
-    if 0 < sig[0] <= _small_max_rows(small_max_rows):
-        return _cc_union_find(e)
+    typ = _id_type(e, "u")
+    fast = _route(e, sig[0], f"node {typ}, label {typ}", _cc_kernel)
+    if fast is not None:
+        return fast
 
     large_star, small_star = _cc_large_star, _cc_small_star
     nodes = (e.select(F.col("u").alias("node"))
@@ -727,75 +736,43 @@ def connected_components(edges: DataFrame, src: str = "src",
                     .alias("label")))
 
 
-def _kcore_single_task(e: DataFrame, k: int, max_rounds: int) -> DataFrame:
+def _kcore_kernel(nodes, u_i, v_i, k: int, max_rounds: int):
     """Single-task exact twin of the distributed k-core peel: the SAME
     synchronous rounds (all sub-k nodes removed together per round),
     the SAME convergence rule (edge-count fixpoint) and the SAME
     ``max_rounds`` exhaustion raise — integer-only work, so the twin is
     trivially bit-identical (pinned by tests/test_graph_small_path.py,
     including the round-budget raise)."""
-    typ = e.schema["u"].dataType.simpleString()
+    import numpy as np
+    import pandas as pd
 
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
-        n = len(nodes)
-        alive = np.ones(len(u_i), bool)
-        prev = len(u_i)
-        converged = prev == 0
-        for _ in range(max_rounds):
-            if converged:
-                break
-            deg = (np.bincount(u_i[alive], minlength=n)
-                   + np.bincount(v_i[alive], minlength=n))
-            keep = deg >= k
-            alive = alive & keep[u_i] & keep[v_i]
-            cur = int(alive.sum())
-            if cur == prev:
-                converged = True
-                break
-            prev = cur
-        if not converged:
-            raise RuntimeError(
-                f"k_core(k={k}) did not converge within max_rounds="
-                f"{max_rounds} peel rounds; raise max_rounds — returning an "
-                "un-peeled supergraph would report non-core nodes as core")
+    n = len(nodes)
+    alive = np.ones(len(u_i), bool)
+    prev = len(u_i)
+    converged = prev == 0
+    for _ in range(max_rounds):
+        if converged:
+            break
         deg = (np.bincount(u_i[alive], minlength=n)
                + np.bincount(v_i[alive], minlength=n))
-        keep = np.flatnonzero(deg >= k)
-        yield pd.DataFrame({"node": nodes[keep],
-                            "core_degree": deg[keep].astype(np.int64)})
-
-    out = _single_task(e, fn, f"node {typ}, core_degree bigint")
-    # EAGER, so the round-budget exhaustion surfaces at CALL time as
-    # the contract RuntimeError (the distributed loop raises at plan
-    # build; a task-side raise would reach the caller as a wrapped
-    # PythonException at action time) — the k-core result is node-
-    # bounded, so the cut is cheap
-    try:
-        return out.localCheckpoint(eager=True)
-    except Exception as ex:
-        if "did not converge within max_rounds" in str(ex):
-            raise RuntimeError(
-                f"k_core(k={k}) did not converge within max_rounds="
-                f"{max_rounds} peel rounds; raise max_rounds — returning "
-                "an un-peeled supergraph would report non-core nodes as "
-                "core") from None
-        raise
+        keep = deg >= k
+        alive = alive & keep[u_i] & keep[v_i]
+        cur = int(alive.sum())
+        if cur == prev:
+            converged = True
+            break
+        prev = cur
+    if not converged:
+        raise _contract(RuntimeError, _kcore_budget_msg(k, max_rounds))
+    deg = (np.bincount(u_i[alive], minlength=n)
+           + np.bincount(v_i[alive], minlength=n))
+    keep = np.flatnonzero(deg >= k)
+    return pd.DataFrame({"node": nodes[keep],
+                         "core_degree": deg[keep].astype(np.int64)})
 
 
 def k_core(edges: DataFrame, k: int = 2, src: str = "src",
-           dst: str = "dst", max_rounds: int = 12,
-           small_max_rows: int | None = None) -> DataFrame:
+           dst: str = "dst", max_rounds: int = 12) -> DataFrame:
     """k-core decomposition by iterative peeling — the density-based
     subgraph extractor that completes the graph family (pagerank =
     importance, components = reachability, triangles = local
@@ -819,9 +796,11 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     e = _cc_canonical(edges, src, dst).localCheckpoint(eager=True)
-    prev0 = e.count()
-    if 0 < prev0 <= _small_max_rows(small_max_rows):
-        return _kcore_single_task(e, k, max_rounds)
+    prev = e.count()
+    fast = _route(e, prev, f"node {_id_type(e, 'u')}, core_degree bigint",
+                  _kcore_kernel, k, max_rounds)
+    if fast is not None:
+        return fast
 
     def degrees(d: DataFrame) -> DataFrame:
         return (d.select(F.col("u").alias("node"))
@@ -829,7 +808,6 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
                 .groupBy("node")
                 .agg(F.count("*").cast("bigint").alias("deg")))
 
-    prev = prev0
     converged = prev == 0
     for _ in range(max_rounds):
         if converged:
@@ -844,81 +822,51 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
             break
         prev = cur
     if not converged:
-        raise RuntimeError(
-            f"k_core(k={k}) did not converge within max_rounds="
-            f"{max_rounds} peel rounds; raise max_rounds — returning an "
-            "un-peeled supergraph would report non-core nodes as core")
+        raise RuntimeError(_kcore_budget_msg(k, max_rounds))
     return (degrees(e).where(F.col("deg") >= k)
             .select("node", F.col("deg").alias("core_degree")))
 
 
-def _hits_single_task(e: DataFrame, rounds: int, top_k: int) -> DataFrame:
+def _hits_kernel(nodes, u_i, v_i, rounds: int, top_k: int):
     """Single-task exact twin of the distributed HITS iteration: pure
     BIGINT sums (h₀=1 → a₁ = in-degree, alternations are integer edge
     sums), the SAME conservative int64 overflow guard with the SAME
     raise, max-normalization once at the end with the identical
     floor6 double arithmetic. int64 accumulation is safe exactly
     where the distributed form is — that is what the guard bounds."""
-    typ = e.schema["v"].dataType.simpleString()
+    import math
 
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
-        n = len(nodes)
-        a = np.bincount(v_i, minlength=n).astype(np.int64)  # a₁ = in-deg
-        outdeg = np.bincount(u_i, minlength=n)
-        din = int(a.max()) if len(a) else 0
-        dout = int(outdeg.max()) if len(outdeg) else 0
-        if din > 0:
-            bound = din ** rounds * max(dout, 1) ** (rounds - 1)
-            if bound > 2 ** 63 - 1:
-                raise ValueError(
-                    f"hits_scores(rounds={rounds}) worst-case score "
-                    f"Din^r·Dout^(r-1) = {din}^{rounds}·{dout}^{rounds - 1} "
-                    "exceeds int64 — note this bound is CONSERVATIVE: it "
-                    "pairs the global max in-degree and max out-degree even "
-                    "when they belong to unconnected nodes, so the true max "
-                    "score may be far smaller (ADVICE r12). Lower rounds "
-                    "(rank order is stable by 2 on conveying graphs) or use "
-                    "a decimal-fold variant if the graph's actual structure "
-                    "keeps scores in range")
-        for _ in range(rounds - 1):
-            h = np.zeros(n, np.int64)
-            np.add.at(h, u_i, a[v_i])
-            a = np.zeros(n, np.int64)
-            np.add.at(a, v_i, h[u_i])
-        # nodes with an authority row = targets of ≥1 edge
-        has = np.zeros(n, bool)
-        has[v_i] = True
-        idx = np.flatnonzero(has)
-        mx = float(a[idx].max()) if len(idx) else 0.0
-        import math
-
-        rows = sorted(((int(a[i]), nodes[i]) for i in idx),
-                      key=lambda t: (-t[0], t[1]))[:top_k]
-        yield pd.DataFrame({
-            "node": [nd for _, nd in rows],
-            "authority_int": np.array([ai for ai, _ in rows],
-                                      dtype=np.int64),
-            "authority": [math.floor(float(ai) / mx * 1_000_000.0 + 0.5)
-                          / 1_000_000.0 for ai, _ in rows]})
-
-    return _single_task(
-        e, fn, f"node {typ}, authority_int bigint, authority double")
+    n = len(nodes)
+    a = np.bincount(v_i, minlength=n).astype(np.int64)  # a₁ = in-deg
+    outdeg = np.bincount(u_i, minlength=n)
+    msg = _hits_bound_msg(rounds, int(a.max()) if len(a) else 0,
+                          int(outdeg.max()) if len(outdeg) else 0)
+    if msg:
+        raise _contract(ValueError, msg)
+    for _ in range(rounds - 1):
+        h = np.zeros(n, np.int64)
+        np.add.at(h, u_i, a[v_i])
+        a = np.zeros(n, np.int64)
+        np.add.at(a, v_i, h[u_i])
+    # nodes with an authority row = targets of ≥1 edge
+    has = np.zeros(n, bool)
+    has[v_i] = True
+    idx = np.flatnonzero(has)
+    mx = float(a[idx].max()) if len(idx) else 0.0
+    rows = sorted(((int(a[i]), nodes[i]) for i in idx),
+                  key=lambda t: (-t[0], t[1]))[:top_k]
+    return pd.DataFrame({
+        "node": [nd for _, nd in rows],
+        "authority_int": np.array([ai for ai, _ in rows], dtype=np.int64),
+        "authority": [math.floor(float(ai) / mx * 1_000_000.0 + 0.5)
+                      / 1_000_000.0 for ai, _ in rows]})
 
 
 def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
-                rounds: int = 2, top_k: int = 20,
-                small_max_rows: int | None = None) -> DataFrame:
+                rounds: int = 2, top_k: int = 20) -> DataFrame:
     """HITS hubs & authorities on a bipartite graph (Kleinberg 1999) —
     the mutual-reinforcement ranking PageRank can't express: a part is
     authoritative when ordered by strong hub customers, a customer is
@@ -959,31 +907,13 @@ def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
          # when the guard first landed with two uncheckpointed degree
          # jobs)
          .localCheckpoint(eager=True))
-    n_edges = e.count()
-    # Fast path BEFORE the degree/guard jobs (round 16): the single
-    # task computes the degree maxima and runs the IDENTICAL
-    # conservative bound check in-kernel, and the eager localCheckpoint
-    # surfaces it at call time as the same contract ValueError — so the
-    # driver-side degree aggregation job is pure duplication here. The
-    # distributed branch keeps the pre-flight (its BIGINT folds cannot
-    # check mid-job). The result is top_k rows, so the cut is free.
-    if 0 < n_edges <= _small_max_rows(small_max_rows):
-        out = _hits_single_task(e, rounds, top_k)
-        try:
-            return out.localCheckpoint(eager=True)
-        except Exception as ex:
-            text = str(ex)
-            if "exceeds int64" in text:
-                import re as _re
-                m = _re.search(
-                    r"hits_scores\(rounds=\d+\).*?keeps scores in range",
-                    text, _re.DOTALL)
-                raise ValueError(
-                    m.group(0) if m else
-                    f"hits_scores(rounds={rounds}) worst-case score "
-                    "exceeds int64 — lower rounds or use a decimal-fold "
-                    "variant") from None
-            raise
+    # The kernel computes the degree maxima and runs the same bound
+    # check itself, so the fast path skips the degree/guard job below.
+    fast = _route(e, e.count(),
+                  f"node {_id_type(e, 'v')}, authority_int bigint, "
+                  "authority double", _hits_kernel, rounds, top_k)
+    if fast is not None:
+        return fast
     # Degree frame = overflow guard input AND iteration 1 (VERDICT r12
     # #2): with h₀ = 1 the first authority update is exactly the
     # in-degree, so ONE bidirectional map-side-combined count job
@@ -1006,24 +936,10 @@ def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
                    F.max(F.when(F.col("s") == "o", F.col("d")))
                    .alias("dout"))
            .first())
-    din, dout = row["din"] or 0, row["dout"] or 0
-    if din > 0:
-        # Scores after r authority updates are bounded by
-        # Din^r · Dout^(r−1) (h₀=1; each authority update multiplies by
-        # ≤ Din, each hub update by ≤ Dout). Exact Python-bigint check —
-        # raise BEFORE launching an iteration that could pass int64.
-        bound = din ** rounds * max(dout, 1) ** (rounds - 1)
-        if bound > 2 ** 63 - 1:
-            raise ValueError(
-                f"hits_scores(rounds={rounds}) worst-case score "
-                f"Din^r·Dout^(r-1) = {din}^{rounds}·{dout}^{rounds - 1} "
-                "exceeds int64 — note this bound is CONSERVATIVE: it "
-                "pairs the global max in-degree and max out-degree even "
-                "when they belong to unconnected nodes, so the true max "
-                "score may be far smaller (ADVICE r12). Lower rounds "
-                "(rank order is stable by 2 on conveying graphs) or use "
-                "a decimal-fold variant if the graph's actual structure "
-                "keeps scores in range")
+    # raise BEFORE launching an iteration that could pass int64
+    msg = _hits_bound_msg(rounds, row["din"] or 0, row["dout"] or 0)
+    if msg:
+        raise ValueError(msg)
     # iteration 1 for free: a₁ = in-degree (h₀ = 1)
     a = (deg.where(F.col("s") == "i")
          .select(F.col("node").alias("v"), F.col("d").alias("a")))
@@ -1048,61 +964,47 @@ def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
             .limit(top_k))
 
 
-def _lpa_single_task(sym: DataFrame, rounds: int, top_k: int) -> DataFrame:
+def _lpa_kernel(nodes, a_i, b_i, rounds: int, top_k: int):
     """Single-task exact twin of the distributed synchronous LPA: the
     SAME deterministic update (most frequent neighbor label, ties to
     the SMALLEST label) over the same symmetrized deduped edge list —
     pure integer counting plus value ordering, so the twin is
-    bit-identical. Label order exploits that ``np.unique`` returns
-    SORTED nodes: comparing node indices ≡ comparing node values
+    bit-identical. Label order exploits that the factorized nodes are
+    SORTED: comparing node indices ≡ comparing node values
     (numeric order for numerics; code-point order for strings, which
     equals Spark's UTF8 binary order on valid UTF-8)."""
-    typ = sym.schema["a"].dataType.simpleString()
+    import numpy as np
+    import pandas as pd
 
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        avs, bvs = [], []
-        for pdf in batches:
-            avs.append(pdf["a"].to_numpy())
-            bvs.append(pdf["b"].to_numpy())
-        av = np.concatenate(avs) if avs else np.array([])
-        bv = np.concatenate(bvs) if bvs else np.array([])
-        nodes, inv = _factorize(av, bv)
-        a_i, b_i = inv[:len(av)].astype(np.int64), inv[len(av):]
-        n = len(nodes)
-        lab = np.arange(n, dtype=np.int64)
-        for _ in range(rounds):
-            key = np.sort(a_i * n + lab[b_i])
-            # sorted-run boundaries ≡ np.unique(key, return_counts=True)
-            # without the second full pass (the sort is the whole cost)
-            starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
-            uniq = key[starts]
-            cnt = np.diff(np.r_[starts, len(key)])
-            ua, ul = uniq // n, uniq % n
-            order = np.lexsort((ul, -cnt, ua))
-            ua_s, ul_s = ua[order], ul[order]
-            first = np.ones(len(ua_s), bool)
-            first[1:] = ua_s[1:] != ua_s[:-1]
-            # every node appears in `a` (sym carries both directions),
-            # so the whole vector is reassigned each round — exactly
-            # the distributed groupBy+argmax window
-            new_lab = lab.copy()
-            new_lab[ua_s[first]] = ul_s[first]
-            lab = new_lab
-        lv, lc = np.unique(lab, return_counts=True)
-        order = np.lexsort((lv, -lc))[:top_k]
-        yield pd.DataFrame({"label": nodes[lv[order]],
-                            "n_nodes": lc[order].astype(np.int64)})
-
-    return _single_task(sym, fn, f"label {typ}, n_nodes bigint")
+    n = len(nodes)
+    lab = np.arange(n, dtype=np.int64)
+    for _ in range(rounds):
+        key = np.sort(a_i * n + lab[b_i])
+        # sorted-run boundaries ≡ np.unique(key, return_counts=True)
+        # without the second full pass (the sort is the whole cost)
+        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        uniq = key[starts]
+        cnt = np.diff(np.r_[starts, len(key)])
+        ua, ul = uniq // n, uniq % n
+        order = np.lexsort((ul, -cnt, ua))
+        ua_s, ul_s = ua[order], ul[order]
+        first = np.ones(len(ua_s), bool)
+        first[1:] = ua_s[1:] != ua_s[:-1]
+        # every node appears in `a` (sym carries both directions),
+        # so the whole vector is reassigned each round — exactly
+        # the distributed groupBy+argmax window
+        new_lab = lab.copy()
+        new_lab[ua_s[first]] = ul_s[first]
+        lab = new_lab
+    lv, lc = np.unique(lab, return_counts=True)
+    order = np.lexsort((lv, -lc))[:top_k]
+    return pd.DataFrame({"label": nodes[lv[order]],
+                         "n_nodes": lc[order].astype(np.int64)})
 
 
 def label_propagation(edges: DataFrame, rounds: int = 2,
                       src: str = "src", dst: str = "dst",
-                      top_k: int = 25,
-                      small_max_rows: int | None = None) -> DataFrame:
+                      top_k: int = 25) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) with a DETERMINISTIC update — the density-community
     complement to connected_components (pure reachability) and k_core
@@ -1124,17 +1026,22 @@ def label_propagation(edges: DataFrame, rounds: int = 2,
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                 & (F.col("a") != F.col("b")))
-         # persist across the self-union's two branches (round 16): a
-         # union does NOT share its subtree, so without the cache the
-         # caller's whole edge lineage (q253: lineitem⋈orders +
-         # distinct) executes TWICE inside the sym materialization.
-         # Released right after the eager checkpoint — within-query.
+         # persist across the self-union's two branches: a union does
+         # NOT share its subtree, so without the cache the caller's
+         # whole edge lineage (q253: lineitem⋈orders + distinct)
+         # executes TWICE inside the sym materialization.
          .persist())
-    sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-           .distinct().localCheckpoint(eager=True))
-    e.unpersist()
-    if 0 < sym.count() <= _small_max_rows(small_max_rows):
-        return _lpa_single_task(sym, rounds, top_k)
+    try:
+        sym = (e.union(e.select(F.col("b").alias("a"),
+                                F.col("a").alias("b")))
+               .distinct().localCheckpoint(eager=True))
+    finally:
+        e.unpersist()
+    fast = _route(sym, sym.count(),
+                  f"label {_id_type(sym, 'a')}, n_nodes bigint",
+                  _lpa_kernel, rounds, top_k)
+    if fast is not None:
+        return fast
     labels = (sym.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     # Checkpoint PERIODICALLY, not per round: an eager localCheckpoint

@@ -1256,9 +1256,10 @@ def _run_stream_to_memory(spark: SparkSession, frame: DataFrame,
       track stream volume (2 here, the session ceiling at firehose
       scale); partition count never changes aggregation/join results.
     * the checkpoint is an explicit tmpfs scratch dir, removed after
-      the run (the memory sink holds the rows; these one-shot
-      checkpoints are never resumed — write_stream_parquet keeps the
-      durable-checkpoint production contract).
+      the run on every path — success, timeout or a failed query,
+      which is stopped first (the memory sink holds the rows; these
+      one-shot checkpoints are never resumed — write_stream_parquet
+      keeps the durable-checkpoint production contract).
     * ``noDataMicroBatches`` is disabled unless
       ``final_watermark_batch=True``: the extra empty batch exists to
       advance the watermark and flush/evict state, which changes NO
@@ -1286,18 +1287,21 @@ def _run_stream_to_memory(spark: SparkSession, frame: DataFrame,
     old_ndb = spark.conf.get(ndb_key, "true")
     if not final_watermark_batch:
         spark.conf.set(ndb_key, "false")
+    q = None
     try:
         with state_sized(spark, nparts):
             q = (frame.writeStream.format("memory").queryName(name)
                  .outputMode(mode).trigger(availableNow=True)
                  .option("checkpointLocation", ckpt).start())
             finished = q.awaitTermination(300)
+        if not finished:
+            raise TimeoutError(
+                f"{tag} streaming job did not finish within 300 s")
     finally:
+        if q is not None and q.isActive:
+            q.stop()
         spark.conf.set(ndb_key, old_ndb)
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"{tag} streaming job did not finish within 300 s")
-    shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

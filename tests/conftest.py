@@ -26,3 +26,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def graph_distributed(monkeypatch):
+    """Pin every graph operator to its distributed form: the one graph
+    fast-path knob at 0."""
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS", "0")

@@ -298,3 +298,29 @@ def test_membw_canary_and_microset_stamped(monkeypatch):
     # scale (sub-second on any healthy host at min-of-1)
     c = bench.run_canary_membw(trials=1)
     assert 0.005 < c < 60.0
+
+
+def test_packed_clamp_keeps_exact_map_value():
+    # a 200 s query packs as the 129.5 s clamp ("zz"); the compact map
+    # carries it exactly (slowest-first), so the guard must compare the
+    # map's 200 s, not the clamp — else a 130 s -> 200 s slide hides
+    import bench
+    from powerdatapipeline_spark.queries import REGISTRY
+
+    timings = {n: 0.8 for n in REGISTRY}
+    timings["flagship"] = 1.2
+    slow = next(iter(REGISTRY))
+    timings[slow] = 200.0
+    _, line = bench.build_payloads(timings, 0.1)
+    parsed = json.loads(line)
+    short = bench.short_name(slow)
+    i = sorted({bench.short_name(n) for n in timings}).index(short)
+    assert parsed["t"][2 * i:2 * i + 2] == "zz"
+    assert parsed["queries"][short] == 200
+    cur = guard._unwrap(parsed)
+    assert cur["queries"][short] == 200
+    # unclamped entries still take the packed decisecond value
+    other = bench.short_name(next(n for n in REGISTRY if n != slow))
+    assert cur["queries"][other] == 0.8
+    prev = _bench({short: 130.0})
+    assert guard.find_regressions(cur, prev) == [(short, 130.0, 200)]

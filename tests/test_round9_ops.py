@@ -213,11 +213,10 @@ def test_cc_large_ids(spark):
     assert cc == {big: big, big + 1: big, big + 2: big}
 
 
-def test_cc_budget_exhaustion_raises(spark):
-    # small_max_rows=0 pins the DISTRIBUTED star contraction: the
-    # round budget is a property of the iterative path (the round-15
-    # single-task union-find converges exactly and has no budget)
+def test_cc_budget_exhaustion_raises(spark, graph_distributed):
+    # graph_distributed pins the DISTRIBUTED star contraction: the
+    # round budget is a property of the iterative path (the single-task
+    # kernel converges exactly and has no budget)
     with pytest.raises(RuntimeError, match="did not converge"):
         gr.connected_components(
-            _edges(spark, [(i, i + 1) for i in range(300)]), max_iter=2,
-            small_max_rows=0)
+            _edges(spark, [(i, i + 1) for i in range(300)]), max_iter=2)

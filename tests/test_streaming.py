@@ -1,6 +1,7 @@
 """Structured Streaming twins (SURVEY.md §2.10): exercised with the
 file-source → memory-sink loop so the same operators run incrementally."""
 
+import os
 import time
 
 import pytest
@@ -303,3 +304,28 @@ def test_stream_static_enrich_matches_batch_join(spark, tmp_path):
     assert got == want and len(got) == 4
     # the unregistered key survives with a NULL dim side
     assert (9, 90.0, None) in got
+
+
+def test_run_stream_to_memory_removes_checkpoint_on_failure(
+        spark, tmp_path, monkeypatch):
+    """A query that fails mid-run still has its scratch checkpoint
+    removed (and is stopped) — the cleanup is not success-only."""
+    from powerdatapipeline_spark import queries as Q
+    from powerdatapipeline_spark.streaming import pipeline
+
+    real, made = pipeline.scratch_dir, []
+
+    def recording_scratch_dir(prefix):
+        made.append(real(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(pipeline, "scratch_dir", recording_scratch_dir)
+    path = _feed(tmp_path, [("2024-01-01 00:00:01", "a", 1.0)])
+    failing = read_stream_csv(spark, path, SCHEMA).select(
+        F.raise_error(F.lit("forced stream failure")).alias("x"))
+    with pytest.raises(Exception, match="forced stream failure"):
+        Q._run_stream_to_memory(spark, failing, "failing", "append")
+    assert len(made) == 1
+    assert not os.path.exists(made[0])
+    assert not any(q.name and q.name.startswith("failing_sink_")
+                   for q in spark.streams.active)

@@ -45,14 +45,20 @@ def _short(name: str) -> str:
     return m.group(1) if m else name
 
 
+#: bench.py clamps a packed entry at 36²−1 deciseconds (``zz``, 129.5 s)
+_PACKED_CLAMP_DS = 36 * 36 - 1
+
+
 def _expand_packed(d: dict) -> dict:
     """Re-expand the round-16 packed timing string (``t``: 2 base36
     digits of deciseconds per query, ascending short-name order — see
     bench.py's module docstring) into the ``queries`` map, OVERRIDING
-    the map's coarser integer-second entries. The name order is
-    reconstructed from the current registry and cross-checked against
-    the payload's ``tch`` name-list checksum; on any mismatch the
-    payload is returned untouched."""
+    the map's coarser integer-second entries — except where the packed
+    value sits at its 129.5 s clamp (``zz``): that is only a lower
+    bound, so a map entry for the query (exact past the clamp) is kept.
+    The name order is reconstructed from the current registry and
+    cross-checked against the payload's ``tch`` name-list checksum; on
+    any mismatch the payload is returned untouched."""
     t = d.get("t")
     if not isinstance(t, str) or not t:
         return d
@@ -69,9 +75,13 @@ def _expand_packed(d: dict) -> dict:
         if (hashlib.md5(",".join(shorts).encode()).hexdigest()[:6]
                 != d["tch"]):
             return d
-    full = {s: int(t[2 * i:2 * i + 2], 36) / 10.0
-            for i, s in enumerate(shorts)}
-    return {**d, "queries": {**d.get("queries", {}), **full}}
+    queries = dict(d.get("queries", {}))
+    in_map = {_short(n) for n in queries}
+    for i, s in enumerate(shorts):
+        ds = int(t[2 * i:2 * i + 2], 36)
+        if ds < _PACKED_CLAMP_DS or s not in in_map:
+            queries[s] = ds / 10.0
+    return {**d, "queries": queries}
 
 
 def _unwrap(d: dict) -> dict | None:
